@@ -150,11 +150,22 @@ class RouteTable:
 
     def route_column(self, tag_col: str = "tag") -> Column:
         """One CASE expression assigning each event its sink name —
-        a single codegen'd pass, no per-route scans."""
+        a single codegen'd pass, no per-route scans.
+
+        A glob with no ``*`` and no braces is a literal L; its branch is
+        ``tag = L OR (startswith(tag, L) AND tag RLIKE glob_to_regex(L))``.
+        That equals the regex alone: Java's ``$`` also matches before a
+        final line terminator, so ``L\\n`` and ``L\\r\\n`` still route,
+        and a NULL tag stays unmatched. The byte compares settle rows
+        equal to L or not starting with it, so no regex runs for them.
+        Wildcard globs keep the plain regex."""
         col = F.lit(UNMATCHED)
         expr: Optional[Column] = None
+        tag = F.col(tag_col)
         for r in self.routes:
-            cond = F.col(tag_col).rlike(glob_to_regex(r.pattern))
+            cond = tag.rlike(glob_to_regex(r.pattern))
+            if not any(ch in r.pattern for ch in "*{}"):
+                cond = (tag == F.lit(r.pattern)) | (tag.startswith(r.pattern) & cond)
             expr = F.when(cond, F.lit(r.name)) if expr is None else expr.when(cond, F.lit(r.name))
         return expr.otherwise(col) if expr is not None else col
 
@@ -191,11 +202,6 @@ def write_fanout(
         .format(fmt)
         .save(base_path)
     )
-
-
-def read_sink(spark, base_path: str, name: str) -> DataFrame:
-    """Read one sink back (partition-pruned scan of route=<name>)."""
-    return spark.read.parquet(base_path).filter(F.col("route") == name)
 
 
 def write_fanout_catalog(

@@ -19,7 +19,8 @@ Semantics preserved (with file:line into /root/reference):
   (``core.rb:143-161``); arrays element-wise
 - per-chunk tag hoisting (``core.rb:86-96``) generalizes to
   compile-time constant folding when the route's input tag is static
-  (``static_tag``), and to runtime array exprs when it is per-row.
+  (``static_tag``), and to byte-level string exprs when it is per-row
+  (:func:`tag_piece_column`).
 """
 
 from __future__ import annotations
@@ -91,61 +92,87 @@ class ReformContext:
         self.warnings.append(msg)
 
     # -- tag decomposition (core.rb:86-88, 163-180) -------------------
-    def tag_parts_expr(self) -> Column:
-        return F.split(_quoted(self.tag_col), r"\.")
-
-    def _static_parts(self) -> Optional[list[str]]:
-        if self.static_tag is None:
-            return None
-        return self.static_tag.split(".")
-
     def tag_part(self, index: int) -> Optional[Column]:
         """``${tag_parts[N]}`` with negative indexing (core.rb:207)."""
-        parts = self._static_parts()
-        if parts is not None:
-            if -len(parts) <= index < len(parts):
-                return F.lit(parts[index])
-            return None  # out of range → unknown
-        arr = self.tag_parts_expr()
-        # try_element_at: 1-based, negative from end, null when out of
-        # range — exactly the reference's dict-miss → "" behavior once
-        # string-coalesced. ANSI-safe (no OOB error).
-        return F.try_element_at(arr, F.lit(index + 1 if index >= 0 else index))
+        return self._tag_piece("part", index)
 
     def tag_affix(self, kind: str, index: int) -> Optional[Column]:
         """``${tag_prefix[N]}`` / ``${tag_suffix[N]}`` (core.rb:163-180).
 
         prefix of a.b.c = ["a","a.b","a.b.c"]; suffix = ["a.b.c","b.c","c"].
         """
-        parts = self._static_parts()
-        if parts is not None:
-            n = len(parts)
-            if not (-n <= index < n):
-                return None
-            i = index % n
-            joined = ".".join(parts[: i + 1] if kind == "prefix" else parts[i:])
-            return F.lit(joined)
-        # ONE codegen'd substring_index instead of materializing the
-        # whole affix array per row (transform over sequence, each
-        # element an array_join of a slice — O(n^2) interpreted work
-        # in the pipeline's hottest expression; stage-decomposed A/B
-        # showed reform dominating the e2e wall time because of it):
-        # prefix[i] = first c parts (positive count), suffix[i] = last
-        # m parts (negative count), with the element count n derived
-        # from the dot count — all plain string expressions inside
-        # whole-stage codegen. Out-of-range indexes null exactly like
-        # try_element_at did.
-        tag = _quoted(self.tag_col)
-        n = F.length(tag) - F.length(F.translate(tag, ".", "")) + F.lit(1)
-        if kind == "prefix":
-            c = F.lit(index + 1) if index >= 0 else (n + F.lit(index + 1))
-            valid = (c >= 1) & (c <= n)
-            cnt = c
+        return self._tag_piece(kind, index)
+
+    def _tag_piece(self, kind: str, index: int) -> Optional[Column]:
+        if self.static_tag is not None:
+            piece = static_tag_piece(self.static_tag, kind, index)
+            return None if piece is None else F.lit(piece)  # None → unknown
+        return tag_piece_column(_quoted(self.tag_col), kind, index)
+
+
+def static_tag_piece(tag: str, kind: str, index: int) -> Optional[str]:
+    """Compile-time ``${tag_parts|tag_prefix|tag_suffix[index]}`` of a
+    known tag (``kind`` is "part", "prefix" or "suffix"); None when the
+    index is out of range."""
+    parts = tag.split(".")
+    n = len(parts)
+    if not -n <= index < n:
+        return None
+    i = index % n
+    if kind == "part":
+        return parts[i]
+    return ".".join(parts[: i + 1] if kind == "prefix" else parts[i:])
+
+
+def tag_piece_column(tag: Column, kind: str, index: int) -> Column:
+    """Per-row ``${tag_parts|tag_prefix|tag_suffix[index]}``, NULL when
+    the tag has too few parts (the reference's dict miss).
+
+    Byte-level: built only from ``substring_index``, ``length`` and
+    ``substring``, which scan the UTF-8 bytes for the one-byte ``.``
+    inside whole-stage codegen. Counting dots with ``translate`` would
+    decode every tag to a Java String and probe a HashMap per char, and
+    a ``split`` array would allocate every part per row. Characters
+    agree with bytes here because UTF-8 never puts ``.`` inside a
+    multibyte character. With t the tag:
+
+    - first c parts: ``substring_index(t, '.', c)``; last m parts:
+      ``substring_index(t, '.', -m)``
+    - without its first i parts:
+      ``substring(t, length(substring_index(t, '.', i)) + 2)``
+    - without its last j parts:
+      ``substring(t, 1, length(t) - length(substring_index(t, '.', -j)) - 1)``
+    - t has at least k parts (k >= 2) iff
+      ``length(substring_index(t, '.', k - 1)) < length(t)``
+    """
+
+    def head(t: Column, c: int) -> Column:
+        return F.substring_index(t, ".", c)
+
+    def tail(t: Column, m: int) -> Column:
+        return F.substring_index(t, ".", -m)
+
+    if kind == "part":
+        piece = tail(head(tag, index + 1), 1) if index >= 0 else head(tail(tag, -index), 1)
+    elif kind == "prefix":
+        if index >= 0:
+            piece = head(tag, index + 1)
+        elif index == -1:
+            piece = tag
         else:
-            m = (n - F.lit(index)) if index >= 0 else F.lit(-index)
-            valid = (m >= 1) & (m <= n)
-            cnt = -m
-        return F.when(valid, F.call_function("substring_index", tag, F.lit("."), cnt))
+            dropped = F.length(tail(tag, -index - 1)) + F.lit(1)
+            piece = F.substr(tag, F.lit(1), F.length(tag) - dropped)
+    else:
+        if index < 0:
+            piece = tail(tag, -index)
+        elif index == 0:
+            piece = tag
+        else:
+            piece = F.substr(tag, F.length(head(tag, index)) + F.lit(2))
+    need = index + 1 if index >= 0 else -index
+    if need < 2:
+        return piece
+    return F.when(F.length(head(tag, need - 1)) < F.length(tag), piece)
 
 
 def token_column(
@@ -244,19 +271,9 @@ def static_template_value(template: str, ctx: ReformContext) -> Optional[str]:
             out.append(ctx.hostname or "")
         elif isinstance(tok, TagRef) and ctx.static_tag is not None:
             out.append(ctx.static_tag)
-        elif isinstance(tok, TagPartRef) and ctx.static_tag is not None:
-            parts = ctx.static_tag.split(".")
-            out.append(parts[tok.index] if -len(parts) <= tok.index < len(parts) else "")
-        elif isinstance(tok, TagAffixRef) and ctx.static_tag is not None:
-            parts = ctx.static_tag.split(".")
-            n = len(parts)
-            if -n <= tok.index < n:
-                i = tok.index % n
-                out.append(
-                    ".".join(parts[: i + 1] if tok.kind == "prefix" else parts[i:])
-                )
-            else:
-                out.append("")
+        elif isinstance(tok, (TagPartRef, TagAffixRef)) and ctx.static_tag is not None:
+            kind = tok.kind if isinstance(tok, TagAffixRef) else "part"
+            out.append(static_tag_piece(ctx.static_tag, kind, tok.index) or "")
         else:
             return None
     return "".join(out)

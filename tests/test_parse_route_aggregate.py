@@ -20,6 +20,7 @@ from fluent_plugin_record_reformer_spark.operators.parse import (
     regex_parse,
 )
 from fluent_plugin_record_reformer_spark.operators.route import (
+    UNMATCHED,
     Route,
     RouteTable,
     glob_to_regex,
@@ -29,6 +30,7 @@ from fluent_plugin_record_reformer_spark.sources.transcripts import (
     synth_transcripts,
     with_tag,
 )
+import __spark_entry__
 
 TS = dt.datetime(2024, 1, 1, 12, 0, 0)
 
@@ -104,6 +106,66 @@ def test_first_match_wins(spark):
     )
     got = {r["tag"]: r["route"] for r in table.assign(df).collect()}
     assert got == {"app.user.x": "users", "app.tool.y": "everything_app", "other": "rest"}
+
+
+@pytest.mark.parametrize(
+    "routes, pins",
+    [
+        (
+            __spark_entry__.E2E_ROUTES.routes,
+            {
+                "reformed.transcripts.user": "user_sink",
+                "reformed.transcripts.user\r\n": "user_sink",
+                "reformed.transcripts.assistant\n": "assistant_sink",
+                "reformed.transcripts.userx": "ops_sink",
+                "reformed.transcripts.user.x": "ops_sink",
+                None: UNMATCHED,
+            },
+        ),
+        # literals with regex metacharacters and an empty part, ahead of
+        # a wildcard that would also match them
+        (
+            [Route("lit", "a..b+c"), Route("dot", "a.b"), Route("wild", "a.**")],
+            {"a..b+c\n": "lit", "a..bbc": "wild", "a.b": "dot", "": UNMATCHED},
+        ),
+    ],
+)
+def test_literal_glob_route_equals_pure_regex(spark, routes, pins):
+    """The literal-glob equality guard in route_column is exact: on
+    every tag it assigns the same sink as a CASE over the plain regexes,
+    in first-match-wins order."""
+    tags = [
+        "reformed.transcripts.user",
+        "reformed.transcripts.assistant",
+        "reformed.transcripts.user.x",
+        "reformed.transcripts.userx",
+        "reformed.transcripts.use",
+        "reformed.transcripts.user\n",
+        "reformed.transcripts.user\r\n",
+        "reformed.transcripts.assistant\n",
+        "reformed.transcripts.user\n\n",
+        "x.reformed.transcripts.user",
+        "a..b+c",
+        "a..b+c\n",
+        "a..bbc",
+        "a.b",
+        "a.b.c",
+        "",
+        None,
+    ]
+    table = RouteTable(routes)
+    pure = None
+    for r in table.routes:
+        cond = F.col("tag").rlike(glob_to_regex(r.pattern))
+        pure = F.when(cond, r.name) if pure is None else pure.when(cond, r.name)
+    df = spark.createDataFrame([(t,) for t in tags], "tag string")
+    rows = df.select(
+        "tag", table.route_column().alias("got"), pure.otherwise(UNMATCHED).alias("want")
+    ).collect()
+    assert len(rows) == len(tags)
+    assert [(r["tag"], r["got"]) for r in rows] == [(r["tag"], r["want"]) for r in rows]
+    got = {r["tag"]: r["got"] for r in rows}
+    assert {t: got[t] for t in pins} == pins
 
 
 def test_write_fanout_single_pass(spark, tmp_path):

@@ -42,13 +42,23 @@ def test_pipeline_e2e_partial_aggregation(spark):
 
 
 def test_reform_has_no_python_nodes(spark):
-    # the reform spec compiles to pure Column exprs — the tag_prefix
-    # HOFs are CodegenFallback islands but there must be NO Python
-    # evaluation anywhere (AQE hides WholeStageCodegen markers until
-    # the final plan, so we assert the absence of the bad nodes)
+    # the reform spec compiles to pure Column exprs — there must be NO
+    # Python evaluation anywhere (AQE hides WholeStageCodegen markers
+    # until the final plan, so we assert the absence of the bad nodes)
     plan = _plan(entrymod.q_reform_flagship(spark, SF))
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert node not in plan
+
+
+@pytest.mark.parametrize("name", ["q_pipeline_e2e", "q_reform_flagship"])
+def test_tag_placeholders_are_byte_level(spark, name):
+    """Tag placeholders compile to substring_index / length / substring
+    only: no translate (a Java String plus a HashMap probe per char)
+    and no per-row split array of the tag."""
+    plan = _plan(getattr(entrymod, name)(spark, SF))
+    assert "substring_index(tag#" in plan, "tag placeholders missing from the plan"
+    assert "translate(" not in plan
+    assert "split(tag#" not in plan
 
 
 def test_column_pruning_reaches_scan(spark):
@@ -330,6 +340,7 @@ def test_corpus_tf_subtree_tokenizes_once(spark, name):
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "simple"
     )
+    assert "Initial Plan" in plan, "AQE explain format changed"
     final = plan.split("Initial Plan")[0]
     assert final.count("regexp_extract_all") == 1, final.count(
         "regexp_extract_all"
@@ -344,4 +355,4 @@ def test_ip_enrich_no_distinct_aggregate(spark):
     pass) may reappear in the plan."""
     df = entrymod.queries()["ip_enrich"](spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "distinct" not in plan.lower(), plan
+    assert "count(distinct" not in plan.lower(), plan

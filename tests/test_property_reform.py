@@ -22,7 +22,10 @@ from fluent_plugin_record_reformer_spark import (  # noqa: E402
     TransformSpec,
     reform,
 )
-from tests.reference_oracle import reform_event  # noqa: E402
+from fluent_plugin_record_reformer_spark.plans.compiler import (  # noqa: E402
+    template_column,
+)
+from tests.reference_oracle import build_placeholders, reform_event  # noqa: E402
 
 HOST = "prop-host"
 WORDS = ["alpha", "beta", "gamma", "x9", "log"]
@@ -122,3 +125,44 @@ def test_reform_matches_python_oracle(spark, tag, record, spec_kw):
             ), (key, got_val, want_val)
         else:
             assert got_val == want_val, (key, got_val, want_val)
+
+
+# Every tag placeholder the byte-level kernels compile, at indexes well
+# past the 6-part maximum drawn below in both directions.
+KERNEL_KEYS = [
+    f"${{{kind}[{i}]}}"
+    for kind in ("tag_parts", "tag_prefix", "tag_suffix")
+    for i in range(-7, 8)
+]
+# Parts of 0-3 characters mixing 1-, 2-, 3- and 4-byte UTF-8; empty
+# parts give leading, trailing and doubled dots (and "" is a 1-part tag).
+kernel_part_st = st.text(alphabet="ab-é日😀", max_size=3)
+kernel_tag_st = st.one_of(
+    st.none(), st.lists(kernel_part_st, min_size=1, max_size=6).map(".".join)
+)
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(tags=st.lists(kernel_tag_st, min_size=1, max_size=16))
+def test_tag_placeholder_kernels_match_oracle(spark, tags):
+    """One DataFrame of drawn tags, every tag_parts / tag_prefix /
+    tag_suffix placeholder compiled per-row: each value equals the
+    oracle's dict lookup, NULL when the index is out of range or the
+    tag is NULL."""
+    ctx = ReformContext(hostname=HOST)
+    cols = [
+        template_column(key, ctx, ["tag"], auto_typecast=True).alias(f"p{j}")
+        for j, key in enumerate(KERNEL_KEYS)
+    ]
+    df = spark.createDataFrame([(t,) for t in tags], "tag string")
+    rows = df.select("tag", *cols).collect()
+    assert len(rows) == len(tags)
+    for row in rows:
+        tag = row["tag"]
+        ph = {} if tag is None else build_placeholders(tag, "", {}, HOST)
+        for j, key in enumerate(KERNEL_KEYS):
+            assert row[f"p{j}"] == ph.get(key), (tag, key, row[f"p{j}"], ph.get(key))
